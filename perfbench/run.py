@@ -116,13 +116,9 @@ def inputs(workload, size, seed):
         return d
     tmp = d + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    params = SIZES[size][workload]
-    if workload == "catalog":
-        gen_inputs.tables(tmp, seed, **params)
-    elif workload == "curation_stream":
-        gen_inputs.stream(tmp, seed, **params)
-    else:
-        gen_inputs.ice(tmp, seed, **params)
+    generate = {"ice_specimen": gen_inputs.ice, "curation_stream": gen_inputs.stream,
+                "catalog": gen_inputs.tables}[workload]
+    generate(tmp, seed, **SIZES[size][workload])
     open(os.path.join(tmp, "_done"), "w").close()
     shutil.rmtree(d, ignore_errors=True)
     os.rename(tmp, d)

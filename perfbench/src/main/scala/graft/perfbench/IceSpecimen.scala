@@ -178,31 +178,3 @@ object IceSpecimen {
     }
   }
 }
-
-/** Small file helpers: line counts, tallies of a written dir, removal. */
-object Disk {
-  private def leaves(f: File): Seq[File] =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(leaves)
-    else if (f.exists()) Seq(f) else Nil
-
-  /** Lines of every visible part file under `path`. */
-  def lines(path: String): Long =
-    leaves(new File(path)).filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
-      .map { f =>
-        val src = scala.io.Source.fromFile(f)
-        try src.getLines().size.toLong finally src.close()
-      }.sum
-
-  /** Files and megabytes under `path`. */
-  def tally(path: String): Map[String, Double] = {
-    val fs = leaves(new File(path))
-    Map("files_created" -> fs.size.toDouble, "mb_written" -> fs.map(_.length).sum / 1e6)
-  }
-
-  def bytes(path: String): Long = leaves(new File(path)).map(_.length).sum
-
-  def delete(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(delete)
-    f.delete()
-  }
-}

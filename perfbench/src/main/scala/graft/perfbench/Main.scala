@@ -2,6 +2,7 @@ package graft.perfbench
 
 import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
+import java.io.File
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
@@ -73,16 +74,17 @@ final class Run(val spark: SparkSession, val tracer: Tracer, val opts: Opts) {
     checks(name) = checks.getOrElse(name, true) && ok
   }
 
-  /** Run timed rounds until `opts.seconds` have passed, and at least
-    * `minRounds` of them.
+  /** Run timed rounds until `opts.seconds` have passed, at least
+    * `minRounds` and at most `maxRounds` of them.
     * The traced run wraps the whole measured phase in a root span, so the
     * spans' self times can be reconciled with its wall.
     */
-  def measure(minRounds: Int)(round: Int => Unit): Unit = {
+  def measure(minRounds: Int, maxRounds: Int)(round: Int => Unit): Unit = {
     val t0 = System.nanoTime()
     tracer.span("bench.measure") {
       var i = 0
-      while (i < minRounds || (System.nanoTime() - t0) / 1e9 < opts.seconds) {
+      while (i < maxRounds &&
+          (i < minRounds || (System.nanoTime() - t0) / 1e9 < opts.seconds)) {
         round(i)
         i += 1
       }
@@ -92,11 +94,41 @@ final class Run(val spark: SparkSession, val tracer: Tracer, val opts: Opts) {
   }
 }
 
+/** Small file helpers: line counts, tallies of a written dir, removal. */
+object Disk {
+  private def leaves(f: File): Seq[File] =
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(leaves)
+    else if (f.exists()) Seq(f) else Nil
+
+  /** Lines of every visible part file under `path`. */
+  def lines(path: String): Long =
+    leaves(new File(path)).filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+      .map { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().size.toLong finally src.close()
+      }.sum
+
+  /** Files and megabytes under `path`. */
+  def tally(path: String): Map[String, Double] = {
+    val fs = leaves(new File(path))
+    Map("files_created" -> fs.size.toDouble, "mb_written" -> fs.map(_.length).sum / 1e6)
+  }
+
+  def bytes(path: String): Long = leaves(new File(path)).map(_.length).sum
+
+  def delete(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(delete)
+    f.delete()
+  }
+}
+
 trait Workload {
   /** Untimed preparation: load inputs, run one warm operation. */
   def setup(run: Run): Unit
   /** Rounds every run makes, however short its seconds. */
   def minRounds: Int = 1
+  /** Rounds the inputs hold. */
+  def maxRounds: Int = Int.MaxValue
   /** One timed round; called until the run's seconds are used up. */
   def round(run: Run, i: Int): Unit
   /** Output checks over what the rounds produced. */
@@ -144,7 +176,7 @@ object Main {
     run.values("session_s") = sessionS
     wl.setup(run)
     val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
-    run.measure(wl.minRounds)(i => wl.round(run, i))
+    run.measure(wl.minRounds, wl.maxRounds)(i => wl.round(run, i))
     wl.verify(run)
     if (opts.trace) {
       // one client thread: the measured phase's spans are those inside the
