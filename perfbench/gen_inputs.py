@@ -150,34 +150,62 @@ def _prose(rng, vocab, k):
     return " ".join(toks)
 
 
-def stream(out, seed, waves, wave_docs, emb_share=0.4, late_share=0.25,
-           twin_share=0.04, copy_share=0.02, dup_every=17, near_every=23):
-    """The curation stream: `waves` waves of `wave_docs` organic documents,
-    the same mix in every wave and under every seed:
+# The stream's mix, the same in every wave and under every seed.
+EMB_SHARE = 0.4     # documents that carry an embedding
+LATE_SHARE = 0.25   # of those, the ones whose embedding arrives late
+TWIN_SHARE = 0.04   # planted semantic twins of earlier on-time embeddings
+COPY_SHARE = 0.02   # planted exact copies of earlier on-time embeddings
+LATE_TWIN_SHARE = 0.02  # planted copies and twins of this wave's late embeddings
+DUP_EVERY = 17      # every 17th document repeats an earlier one exactly
+NEAR_EVERY = 23     # every 23rd repeats the one before with two words changed
 
-    - every `dup_every`-th document repeats an earlier one exactly and every
-      `near_every`-th repeats one with two words changed (the dedup paths);
-    - an `emb_share` of documents carries a 64-dimensional embedding and a
-      `late_share` of those gets it only in the late pass;
+
+def _twin(v, j):
+    """An exact copy of `v` for even `j`, a semantic twin (one component
+    nudged by 0.1%) for odd `j`."""
+    v = v.copy()
+    if j % 2:
+        v[0] = np.float32(v[0] * 1.001)
+    return v
+
+
+def stream(out, seed, waves, wave_docs):
+    """The curation stream: `waves` waves of `wave_docs` organic documents,
+    with the mix above:
+
+    - exact and near repeats of earlier documents (the dedup paths);
+    - an EMB_SHARE of documents carries a 64-dimensional embedding and a
+      LATE_SHARE of those gets it only in the late pass;
     - from the second wave on, each wave adds planted semantic twins (an
       earlier on-time embedding nudged by 0.1% in one component) and exact
-      embedding copies, both with fresh text, as in `q_unified_curation`.
+      embedding copies, both with fresh text, as in `q_unified_curation`:
+      decide finds them in the store;
+    - each wave adds on-time copies and twins of its own late embeddings,
+      with fresh text and higher ids: the late pass evicts them from the
+      store when the earlier document's embedding arrives.
     """
     rng = np.random.default_rng(seed)
     vocab = _vocab(rng)
     os.makedirs(out, exist_ok=True)
     ids, texts, wave_of, late, emb_ids, embs = [], [], [], [], [], []
     on_time = []  # (doc_id, vector) of earlier waves' on-time embeddings
-    n_emb = int(wave_docs * emb_share)
-    n_late = int(n_emb * late_share)
-    n_twin, n_copy = int(wave_docs * twin_share), int(wave_docs * copy_share)
+    n_emb = int(wave_docs * EMB_SHARE)
+    n_late = int(n_emb * LATE_SHARE)
+    n_twin, n_copy = int(wave_docs * TWIN_SHARE), int(wave_docs * COPY_SHARE)
+    n_late_twin = int(wave_docs * LATE_TWIN_SHARE)
+
+    def plant(w, v):
+        d = len(ids)
+        ids.append(d); texts.append(_prose(rng, vocab, 60)); wave_of.append(w)
+        late.append(False); emb_ids.append(d); embs.append(v)
+
     for w in range(waves):
         base = len(ids)
         wave_texts = [_prose(rng, vocab, k) for k in rng.integers(40, 160, wave_docs)]
         for j in range(wave_docs):
-            if j and j % dup_every == 0:
+            if j and j % DUP_EVERY == 0:
                 wave_texts[j] = texts[rng.integers(0, base)] if base else wave_texts[j - 1]
-            elif j and j % near_every == 0:
+            elif j and j % NEAR_EVERY == 0:
                 toks = wave_texts[j - 1].split(" ")
                 for k in rng.integers(0, len(toks), 2):
                     toks[k] = "edit"
@@ -194,12 +222,9 @@ def stream(out, seed, waves, wave_docs, emb_share=0.4, late_share=0.25,
         if on_time:
             src = rng.choice(len(on_time), n_twin + n_copy, replace=False)
             for j, k in enumerate(src):
-                v = on_time[k][1].copy()
-                if j < n_twin:
-                    v[0] = np.float32(v[0] * 1.001)
-                d = len(ids)
-                ids.append(d); texts.append(_prose(rng, vocab, 60)); wave_of.append(w)
-                late.append(False); emb_ids.append(d); embs.append(v)
+                plant(w, _twin(on_time[k][1], 1 if j < n_twin else 0))
+        for j, k in enumerate(order[:n_late_twin]):
+            plant(w, _twin(vecs[k], j))
         on_time += [(base + j, vecs[j]) for j in has_emb if j not in is_late]
     _write(out, "documents", {
         "doc_id": pa.array(ids, pa.int64()), "text": texts,
@@ -215,7 +240,8 @@ def stream(out, seed, waves, wave_docs, emb_share=0.4, late_share=0.25,
 
 def ice(out, seed, specimens, grains, samples, iterations, particles, steps):
     """Specimen configs (mesh seed and sizes, then a solid rotating through
-    box, sphere and z-cylinder with a seeded centre) and one snapshot
+    box, sphere and z-cylinder, starting at `seed % 3`, with a seeded
+    centre) and one snapshot
     series of `particles` x `steps` frames, 250 steps apart.
     """
     rng = np.random.default_rng(seed)
@@ -226,7 +252,7 @@ def ice(out, seed, specimens, grains, samples, iterations, particles, steps):
         cx, cy = (100 + rng.uniform(-10, 10, 2)).round(3)
         solid = ["box %s %s %s %s 0 25" % (cx - 50, cx + 50, cy - 50, cy + 50),
                  "sphere %s %s 12.5 60" % (cx, cy),
-                 "cylinder %s %s 0 25 60" % (cx, cy)][k % 3]
+                 "cylinder %s %s 0 25 60" % (cx, cy)][(seed + k) % 3]
         lines.append(f"{mesh_seed} {grains} 200 200 {iterations} {samples} {solid}")
     with open(os.path.join(out, "specimens.tsv"), "w") as f:
         f.write("\n".join(lines) + "\n")

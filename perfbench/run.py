@@ -77,7 +77,7 @@ def sources():
 
 def build():
     """Compile with sbt unless the sources are unchanged since the last
-    build; return the runtime classpath."""
+    build; return the runtime classpath and the sources' hash."""
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         fail("run from the root of a checkout: src/main/scala/graft is missing")
     h = hashlib.sha256()
@@ -89,7 +89,7 @@ def build():
     out = os.path.join(CACHE, "build")
     cp_file = os.path.join(out, "classpath.txt")
     if os.path.exists(cp_file) and open(os.path.join(out, "stamp")).read() == stamp:
-        return open(cp_file).read().strip()
+        return open(cp_file).read().strip(), stamp
     os.makedirs(out, exist_ok=True)
     proc = subprocess.run(
         ["sbt", "-batch", "-Dsbt.log.noformat=true", "compile",
@@ -105,7 +105,7 @@ def build():
         f.write(cp)
     with open(os.path.join(out, "stamp"), "w") as f:
         f.write(stamp)
-    return cp
+    return cp, stamp
 
 
 def inputs(workload, size, seed):
@@ -162,7 +162,7 @@ def main():
         fail("BENCHMARK.json is missing from the current directory")
     with open(spec_path) as f:
         spec = json.load(f)
-    cp = build()
+    cp, stamp = build()
     started = time.time()
     inp = inputs(a.workload, a.size, a.seed)
     work = os.path.join(CACHE, "work", f"{a.workload}-{os.getpid()}")
@@ -184,8 +184,8 @@ def main():
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    # the same seed must give the same outputs in every run
-    digest_file = os.path.join(inp, "digest")
+    # the same seed must give the same outputs in every run of one build
+    digest_file = os.path.join(inp, f"digest-{stamp[:16]}")
     if os.path.exists(digest_file):
         same = open(digest_file).read() == res["digest"]
         res["checks"]["same_seed_same_digest"] = same

@@ -1,9 +1,11 @@
 package graft.perfbench
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.Tables
@@ -13,7 +15,10 @@ import graft.queries.Verdicts
 /** The continuous text+vector corpus build: seeded waves of documents go
   * through `UnifiedFlow.decide` then `UnifiedFlow.commit` into one store;
   * a seeded share of documents arrives without its embedding, delivered by
-  * a `UnifiedFlow.lateEmbeddings` pass after each wave.
+  * a `UnifiedFlow.lateEmbeddings` pass after each wave. Set-up ingests the
+  * first `Prefill` waves, with their late pass, into the same store, so the
+  * first timed wave already probes a grown store holding the originals of
+  * its planted twins and copies.
   *
   * Inputs under `<inputs>`: `documents.parquet` and `embeddings.parquet`
   * (read through `graft.Tables`), and `plan.parquet` — per document its
@@ -27,10 +32,14 @@ final class CurationStream(inputs: String, work: String) extends Workload {
   private var waves = 0
   private val store = s"$work/stream/store"
   private var cursor = 0L
-  /** Every wave's decision rows, in wave order. */
-  private val decisions = mutable.ArrayBuffer.empty[(Int, Array[Row])]
+  /** Every batch's decision rows, in ingest order. */
+  private val decisions = mutable.ArrayBuffer.empty[Array[Row]]
   /** Every late pass's correction rows (doc_id, status), in pass order. */
   private val corrections = mutable.ArrayBuffer.empty[Array[(Long, String)]]
+  /** The late documents' (doc_id, embedding), held on the driver. */
+  private var lateRows: Array[Row] = Array.empty
+  private var lateSchema: StructType = _
+  private var wavesDone = 0
   private var docsIn = 0L
   private var streamS = 0.0
 
@@ -47,89 +56,85 @@ final class CurationStream(inputs: String, work: String) extends Workload {
       .join(emb.select(col("vec_id").as("doc_id"), col("embedding")), Seq("doc_id"), "left")
       .cache()
     waves = corpus.agg(max("wave")).head().getInt(0) + 1
+    val late = corpus.filter(col("late")).select("doc_id", "embedding")
+    lateRows = late.collect()
+    lateSchema = late.schema.add("prio", LongType)
     bench = Bridge.dropCheckpointConstraints(
       CurationFlow.benchShingles(docs).localCheckpoint())
-    // warm wave and late pass on a throwaway store
-    val warm = s"$work/stream/warm"
+    // the first waves as one untimed batch at prio 0: it warms every plan
+    // and grows the store the timed waves probe
     run.warm {
-      val staged = UnifiedFlow.decide(warm,
-        waveInput(0).filter(col("doc_id") % 10 === 0), bench, 0L)
-      UnifiedFlow.commit(warm, staged, prio = 0L)
-      UnifiedFlow.lateEmbeddings(warm, lateInput(0, staged.decisions)).collect()
+      val rows = ingest(run, 0 until Prefill, 0L)
+      decisions += rows
+      corrections += deliver(run, rows, 0L)
     }
-    Disk.delete(new java.io.File(warm))
+    wavesDone = Prefill
   }
 
-  /** A wave's input: its documents, the late ones without embedding. */
-  private def waveInput(w: Int): DataFrame =
-    corpus.filter(col("wave") === w)
+  /** The documents of waves `ws`, the late ones without embedding. */
+  private def waveInput(ws: Seq[Int]): DataFrame =
+    corpus.filter(col("wave").isin(ws: _*))
       .select(col("doc_id"), col("text"), col("n_chars"),
         when(col("late"), lit(null)).otherwise(col("embedding")).as("embedding"))
 
-  /** The late embeddings of wave `w`'s kept documents. */
-  private def lateInput(w: Int, kept: DataFrame): DataFrame =
-    corpus.filter(col("wave") === w && col("late"))
-      .join(kept.filter(col("status") === "kept").select("doc_id"), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("embedding"), col("wave").cast("long").as("prio"))
-
-  private def wave(run: Run, w: Int): Unit = {
+  /** Decide and commit the documents of waves `ws` as one batch at
+    * `prio`; returns the decision rows.
+    */
+  private def ingest(run: Run, ws: Seq[Int], prio: Long): Array[Row] = {
     val t = run.tracer
-    val in = waveInput(w)
-    val rows = run.op("stream.wave_s") {
-      val (staged, rows) = t.spanWith("ops.unified_decide") {
-        val staged = UnifiedFlow.decide(store, in, bench, cursor)
-        (staged, staged.decisions.select("doc_id", "status", "matched_id", "n_tok",
-          "seq_id", "seq_offset").collect())
-      } { case (_, rows) => Map("kept_frac" ->
-        rows.count(_.getString(1) == "kept").toDouble / math.max(1, rows.length)) }
-      val before = Disk.tally(store)
-      t.spanWith("ops.unified_commit")(UnifiedFlow.commit(store, staged, prio = w.toLong))(
-        _ => delta(before, Disk.tally(store)))
-      cursor = staged.cursor
-      rows
-    }
-    rows.foreach { rs =>
-      decisions += ((w, rs))
-      docsIn += rs.length
-    }
+    val (staged, rows) = t.spanWith("ops.unified_decide") {
+      val staged = UnifiedFlow.decide(store, waveInput(ws), bench, cursor)
+      (staged, staged.decisions.select("doc_id", "status", "matched_id", "n_tok",
+        "seq_id", "seq_offset").collect())
+    } { case (_, rows) => Map("kept_frac" ->
+      rows.count(_.getString(1) == "kept").toDouble / math.max(1, rows.length)) }
+    t.spanWrites("ops.unified_commit", store)(UnifiedFlow.commit(store, staged, prio = prio))
+    cursor = staged.cursor
+    rows
   }
 
-  private def late(run: Run, w: Int): Unit = {
-    val spark = run.spark
-    import spark.implicits._
-    val kept = decisions.filter(_._1 == w).flatMap(_._2)
-      .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "status")
-    val in = lateInput(w, kept).localCheckpoint()
-    val before = Disk.tally(store)
-    run.op("stream.late_s") {
-      run.tracer.spanWith("ops.late_embeddings") {
-        UnifiedFlow.lateEmbeddings(store, in).select("doc_id", "status").collect()
-      }(_ => delta(before, Disk.tally(store)))
-    }.foreach(rows => corrections += rows.map(r => (r.getLong(0), r.getString(1))))
+  /** The late pass: the embeddings of the kept documents among `rows`,
+    * at `prio`, as a local frame (no job builds it).
+    */
+  private def deliver(run: Run, rows: Array[Row], prio: Long): Array[(Long, String)] = {
+    val kept = rows.filter(_.getString(1) == "kept").map(_.getLong(0)).toSet
+    val in = run.spark.createDataFrame(
+      lateRows.filter(r => kept(r.getLong(0)))
+        .map(r => Row(r.getLong(0), r.get(1), prio)).toSeq.asJava, lateSchema)
+    run.tracer.spanWrites("ops.late_embeddings", store) {
+      UnifiedFlow.lateEmbeddings(store, in).select("doc_id", "status").collect()
+    }.map(r => (r.getLong(0), r.getString(1)))
   }
 
-  override def maxRounds: Int = waves
+  override def maxRounds: Int = waves - Prefill
 
   def round(run: Run, i: Int): Unit = {
+    val w = Prefill + i
     val t0 = System.nanoTime()
-    wave(run, i)
-    late(run, i)
+    run.op("stream.wave_s")(ingest(run, Seq(w), w.toLong)).foreach { rows =>
+      decisions += rows
+      docsIn += rows.length
+      run.op("stream.late_s")(deliver(run, rows, w.toLong)).foreach(corrections += _)
+    }
     streamS += (System.nanoTime() - t0) / 1e9
+    wavesDone = w + 1
     if (i == 0) recordDigest(run)
   }
 
-  /** The first round's (doc_id, status) pairs go into the run's digest. */
+  /** The (doc_id, status) pairs of set-up and the first round go into the
+    * run's digest.
+    */
   private def recordDigest(run: Run): Unit =
-    run.outputs ++= decisions.flatMap(_._2).map(r => s"${r.getLong(0)}:${r.getString(1)}") ++
+    run.outputs ++= decisions.flatten.map(r => s"${r.getLong(0)}:${r.getString(1)}") ++
       corrections.flatten.map { case (d, s) => s"late:$d:$s" }
 
   def verify(run: Run): Unit = {
     val spark = run.spark
     import spark.implicits._
-    val all = decisions.flatMap(_._2)
+    val all = decisions.flatten
     (all.map(_.getString(1)) ++ corrections.flatten.map(_._2)).groupBy(identity)
       .foreach { case (s, xs) => run.values(s"stream.status.$s") = xs.size }
-    val waveDocs = corpus.filter(col("wave") < decisions.map(_._1).max + 1)
+    val waveDocs = corpus.filter(col("wave") < wavesDone)
       .select("doc_id").as[Long].collect()
     run.check("one_decision_per_doc") {
       val ids = all.map(_.getLong(0))
@@ -175,14 +180,14 @@ final class CurationStream(inputs: String, work: String) extends Workload {
     run.values("stream.wave_s") = wave
     run.values("stream.late_s") = lateS
     run.values("stream.docs_per_s") = docsIn / streamS
-    run.values("stream.store_bytes_per_doc") = Disk.bytes(store).toDouble / docsIn
+    run.values("stream.store_bytes_per_doc") =
+      Disk.bytes(store).toDouble / decisions.map(_.length).sum
     Map("op_s" -> wave, "aux_s" -> lateS, "throughput_per_s" -> docsIn / streamS)
   }
 }
 
 object CurationStream {
   val PackBudget = 256L
-
-  def delta(before: Map[String, Double], after: Map[String, Double]): Map[String, Double] =
-    after.map { case (k, v) => k -> (v - before.getOrElse(k, 0.0)) }
+  /** Waves set-up ingests before the first timed one. */
+  val Prefill = 1
 }

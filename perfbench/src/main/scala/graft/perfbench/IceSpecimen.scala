@@ -2,6 +2,8 @@ package graft.perfbench
 
 import java.io.File
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +24,9 @@ final class IceSpecimen(inputs: String, work: String) extends Workload {
 
   private var specs: IndexedSeq[Spec] = IndexedSeq.empty
   private var frames: DataFrame = _
-  private var completed = 0
+  private val outcomes = mutable.ArrayBuffer.empty[Outcome]
+  /** The snapshot dirs kept for the read-back check. */
+  private val written = mutable.ArrayBuffer.empty[String]
 
   def setup(run: Run): Unit = {
     val spark = run.spark
@@ -49,8 +53,7 @@ final class IceSpecimen(inputs: String, work: String) extends Workload {
     val t = run.tracer
     val deck = dir("deck", i)
     val res = t.span("pipeline.generate")(IcePipeline.generate(spark, s.cfg))
-    t.spanWith("formats.facet_export")(IcePipeline.exportFacets(res.facets, deck))(
-      _ => Disk.tally(deck))
+    t.spanWrites("formats.facet_export", deck)(IcePipeline.exportFacets(res.facets, deck))
     val cut = t.spanWith("pipeline.cut") {
       IcePipeline.cut(spark, deck, s.solid, PlaneLo, PlaneHi).collect()
     }(rows => Map("kept_frac" ->
@@ -61,9 +64,9 @@ final class IceSpecimen(inputs: String, work: String) extends Workload {
   private def snapshot(run: Run, i: Int): String = {
     val t = run.tracer
     val soa = dir("soa", i)
-    t.spanWith("sources.soabin_write") {
+    t.spanWrites("sources.soabin_write", soa) {
       frames.write.format(SoASource).option("path", soa).mode("append").save()
-    }(_ => Disk.tally(soa))
+    }
     t.span("sources.soabin_read") {
       PostProcess.snapshotDeltas(run.spark.read.format(SoASource).load(s"$soa/*.bin"))
         .write.format("noop").mode("overwrite").save()
@@ -73,26 +76,35 @@ final class IceSpecimen(inputs: String, work: String) extends Workload {
 
   def round(run: Run, i: Int): Unit = {
     val s = specs(i % specs.size)
-    // Lloyd relaxation runs inside generate; the traced run times it once
-    // more on its own, so its share of generate is known
-    if (run.tracer.enabled)
-      run.tracer.span("pipeline.lloyd")(VoronoiMesh.lloydRelax(run.spark, s.cfg))
-    run.op("ice.specimen_s")(specimen(run, s, i)).foreach { o =>
-      completed += 1
-      checkSpecimen(run, o, i == 0)
-    }
-    Disk.delete(new File(dir("deck", i)))
+    run.op("ice.specimen_s")(specimen(run, s, i)).foreach(outcomes += _)
     (0 until SnapshotsPerSpecimen).foreach { j =>
       val k = i * SnapshotsPerSpecimen + j
-      val soa = run.op("ice.snapshot_s")(snapshot(run, k))
-      if (j == 0) soa.foreach(checkSnapshot(run, _, i == 0))
-      Disk.delete(new File(dir("soa", k)))
+      // the first series of each specimen stays on disk for the checks
+      run.op("ice.snapshot_s")(snapshot(run, k)).foreach(soa =>
+        if (j == 0) written += soa else Disk.delete(new File(soa)))
     }
+    // Lloyd relaxation runs inside generate; the traced run times it once
+    // more on its own, so its share of generate is known. It runs last, so
+    // the timed operations of the first round meet the same warm state as
+    // in an untraced run.
+    if (run.tracer.enabled)
+      run.tracer.span("pipeline.lloyd")(VoronoiMesh.lloydRelax(run.spark, s.cfg))
   }
 
-  /** `record` adds the outputs to the run's digest: the first round's
-    * only, since how many rounds run depends on the clock.
+  /** The checks run after the measured phase, over every round's outputs;
+    * the first specimen's go into the run's digest, since how many rounds
+    * run depends on the clock.
     */
+  def verify(run: Run): Unit = {
+    run.check("specimens_completed")(outcomes.nonEmpty)
+    outcomes.zipWithIndex.foreach { case (o, i) => checkSpecimen(run, o, i == 0) }
+    written.foreach(soa => run.check("soabin_readback_equals_written") {
+      val back = run.spark.read.format(SoASource).load(s"$soa/*.bin")
+      back.except(frames).isEmpty && frames.except(back).isEmpty
+    })
+    (outcomes.map(_.deck) ++ written).foreach(d => Disk.delete(new File(d)))
+  }
+
   private def checkSpecimen(run: Run, o: Outcome, record: Boolean): Unit = {
     val deckLines = Disk.lines(o.deck)
     if (record) run.outputs += s"${o.spec.cfg.seed}: layer1=${o.res.selected.sorted.mkString(",")} " +
@@ -110,24 +122,18 @@ final class IceSpecimen(inputs: String, work: String) extends Workload {
     run.check("deck_lines_equal_facet_rows")(deckLines == o.res.facets.count())
   }
 
-  private def checkSnapshot(run: Run, soa: String, record: Boolean): Unit = {
-    val back = run.spark.read.format(SoASource).load(s"$soa/*.bin")
-    if (record) run.outputs += s"soabin: ${Disk.tally(soa)("files_created")} files, ${Disk.bytes(soa)} bytes"
-    run.check("soabin_readback_equals_written")(
-      back.except(frames).isEmpty && frames.except(back).isEmpty)
-  }
-
-  def verify(run: Run): Unit =
-    run.check("specimens_completed")(completed > 0)
-
+  /** Specimens per second of program time: each specimen with its
+    * snapshot series, from the timed operations alone.
+    */
   def metrics(run: Run): Map[String, Double] = {
-    val spec = Stats.median(run.samples("ice.specimen_s").toSeq)
-    val snap = Stats.median(run.samples("ice.snapshot_s").toSeq)
-    val done = run.samples("ice.specimen_s").size
+    val specS = run.samples("ice.specimen_s").toSeq
+    val snapS = run.samples("ice.snapshot_s").toSeq
+    val spec = Stats.median(specS)
+    val snap = Stats.median(snapS)
     run.values("ice.specimen_s") = spec
     run.values("ice.snapshot_s") = snap
     Map("op_s" -> spec, "aux_s" -> snap,
-      "throughput_per_s" -> done / run.values("measure_wall_s"))
+      "throughput_per_s" -> specS.size / (specS.sum + snapS.sum))
   }
 }
 
@@ -139,9 +145,10 @@ object IceSpecimen {
   val PlaneHi = 23.0
   val ZStrips = 10
   /** Snapshot series written and read back per specimen; their median is
-    * steadier than one short operation.
+    * steadier than one short operation, and the first series after a
+    * specimen runs slower than the rest.
     */
-  val SnapshotsPerSpecimen = 3
+  val SnapshotsPerSpecimen = 5
 
   final case class Spec(cfg: VoronoiMesh.MeshConfig, solid: SpecimenCut.Solid)
   final case class Outcome(spec: Spec, res: IcePipeline.Result, cut: Array[Row],

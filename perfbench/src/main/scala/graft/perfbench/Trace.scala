@@ -61,9 +61,12 @@ final class JobStats extends SparkListener {
   }
 }
 
-/** One closed span: a call the benchmark made into a layer. */
+/** One closed span: a call the benchmark made into a layer. `tracerNs` is
+  * the tracer's own work inside the span's interval: bus drains, counter
+  * reads and directory tallies of the spans nested in it.
+  */
 final case class Span(id: Int, name: String, parent: Int, runId: String,
-    startNs: Long, endNs: Long, counters: Map[String, Double]) {
+    startNs: Long, endNs: Long, tracerNs: Long, counters: Map[String, Double]) {
   def wallS: Double = (endNs - startNs) / 1e9
 }
 
@@ -81,13 +84,19 @@ final class Tracer(sc: SparkContext, val enabled: Boolean, runId: String,
   private val closed = mutable.ArrayBuffer.empty[Span]
   private var stack = List.empty[Int]
   private var nextId = 0
-
-  /** Run `body` inside span `name`. `extra` adds counters computed from
-    * the body's result once the span has closed.
-    */
-  def span[T](name: String)(body: => T): T = spanWith(name)(body)(_ => Map.empty)
-
   private var muted = false
+  /** Nanoseconds the tracer has spent on its own work so far. */
+  private var overheadNs = 0L
+
+  private def overhead[A](work: => A): A = {
+    val t = System.nanoTime()
+    try work finally overheadNs += System.nanoTime() - t
+  }
+
+  private def recording: Boolean = stats.isDefined && !muted
+
+  /** Run `body` inside span `name`. */
+  def span[T](name: String)(body: => T): T = spanWith(name)(body)(_ => Map.empty)
 
   /** Run `body` without recording spans: the untimed warm operations. */
   def quiet[T](body: => T): T = {
@@ -95,40 +104,52 @@ final class Tracer(sc: SparkContext, val enabled: Boolean, runId: String,
     try body finally muted = false
   }
 
+  /** `span`, adding the files and megabytes `body` leaves under `dir`. */
+  def spanWrites[T](name: String, dir: String)(body: => T): T =
+    if (!recording) body
+    else {
+      val before = overhead(Disk.tally(dir))
+      spanWith(name)(body)(_ => Disk.tally(dir).map { case (k, v) =>
+        k -> (v - before.getOrElse(k, 0.0)) })
+    }
+
+  /** `span`; `extra` adds counters computed from the body's result once
+    * the span has closed.
+    */
   def spanWith[T](name: String)(body: => T)(extra: T => Map[String, Double]): T =
     stats match {
-      case _ if muted => body
-      case None => body
-      case Some(st) =>
-        Bridge.awaitListenerBusEmpty(sc)
-        val before = st.snapshot()
+      case Some(st) if !muted =>
+        val before = overhead { Bridge.awaitListenerBusEmpty(sc); st.snapshot() }
         val id = nextId
         nextId += 1
         val parent = stack.headOption.getOrElse(-1)
         stack = id :: stack
         val startMs = System.currentTimeMillis()
+        val o0 = overheadNs
         val t0 = System.nanoTime()
         val out = try body finally stack = stack.tail
         val t1 = System.nanoTime()
+        val o1 = overheadNs
         val endMs = System.currentTimeMillis()
-        Bridge.awaitListenerBusEmpty(sc)
-        val after = st.snapshot()
-        val wall = (t1 - t0) / 1e9
-        val taskS = (after.taskNs - before.taskNs) / 1e9
-        val gap = math.max(0.0,
-          wall - st.busyMs(startMs, endMs) / 1e3)
-        val base = Map(
-          "jobs" -> (after.jobs - before.jobs).toDouble,
-          "tasks" -> (after.tasks - before.tasks).toDouble,
-          "task_s" -> taskS,
-          "shuffle_write_mb" -> (after.shuffleWrite - before.shuffleWrite) / 1e6,
-          "spill_mb" -> (after.spill - before.spill) / 1e6,
-          "mb_read" -> (after.bytesRead - before.bytesRead) / 1e6,
-          "driver_gap_s" -> math.min(gap, wall),
-          "jobs_failed" -> (after.jobsFailed - before.jobsFailed).toDouble,
-          "tasks_failed" -> (after.tasksFailed - before.tasksFailed).toDouble)
-        closed += Span(id, name, parent, runId, t0, t1, base ++ extra(out))
+        overhead {
+          Bridge.awaitListenerBusEmpty(sc)
+          val after = st.snapshot()
+          val wall = (t1 - t0) / 1e9
+          val gap = math.max(0.0, wall - st.busyMs(startMs, endMs) / 1e3)
+          val base = Map(
+            "jobs" -> (after.jobs - before.jobs).toDouble,
+            "tasks" -> (after.tasks - before.tasks).toDouble,
+            "task_s" -> (after.taskNs - before.taskNs) / 1e9,
+            "shuffle_write_mb" -> (after.shuffleWrite - before.shuffleWrite) / 1e6,
+            "spill_mb" -> (after.spill - before.spill) / 1e6,
+            "mb_read" -> (after.bytesRead - before.bytesRead) / 1e6,
+            "driver_gap_s" -> math.min(gap, wall),
+            "jobs_failed" -> (after.jobsFailed - before.jobsFailed).toDouble,
+            "tasks_failed" -> (after.tasksFailed - before.tasksFailed).toDouble)
+          closed += Span(id, name, parent, runId, t0, t1, o1 - o0, base ++ extra(out))
+        }
         out
+      case _ => body
     }
 
   def spans: Seq[Span] = closed.toSeq.sortBy(_.id)
